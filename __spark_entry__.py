@@ -946,6 +946,15 @@ def _sql_urn_encode(expr: str) -> str:
     return expr
 
 
+def _sql_slug(expr: str) -> str:
+    """rules.slugify in SQL: strip surrounding whitespace, lower, runs of
+    whitespace/underscore -> '-'.  (DuckDB's trim() strips spaces only.)"""
+    return (
+        f"regexp_replace(lower(regexp_replace({expr}, '^\\s+|\\s+$', '', 'g')),"
+        " '[\\s_]+', '-', 'g')"
+    )
+
+
 def _jsonld_conversion_sql() -> str:
     """DuckDB twin of the JSON-LD -> triples conversion: the same
     runtime-type ladder (json_type == schema_of_variant dispatch), items
@@ -1093,7 +1102,7 @@ def _pipeline_oracle_sql(path: str, final_select: str | None = None) -> str:
        obj_is_ref, dtype, conv_id, turn_idx
 FROM t_ded
 WHERE obj_is_ref OR pred NOT IN (SELECT pred FROM uidp)"""
-    slug = "regexp_replace(lower(trim(obj_name)), '[ _]+', '-', 'g')"
+    slug = _sql_slug("obj_name")
     anorm = "trim(regexp_replace(lower({x}), '[-_\\s]+', ' ', 'g'))"
 
     return f"""
@@ -1185,7 +1194,7 @@ m_slack AS (
 m_tool AS (
     SELECT conv_id, turn_idx, 'tool_call' AS kind,
            {rules.KIND_RANK['tool_call']} AS kind_rank, 0 AS match_idx,
-           'urn:Tool:' || regexp_replace(lower(trim(tool)), '[ _]+', '-', 'g') AS urn,
+           'urn:Tool:' || {_sql_slug('tool')} AS urn,
            'Tool' AS entity_type, tool AS name,
            'usedTool' AS pred, CAST(NULL AS VARCHAR) AS subj_urn,
            'HIGH' AS confidence
@@ -1195,7 +1204,7 @@ m_struct AS (
     SELECT conv_id, turn_idx, 'struct' AS kind,
            {rules.KIND_RANK['struct']} AS kind_rank, 0 AS match_idx,
            'urn:' || etype || ':'
-               || regexp_replace(lower(trim(sname)), '[ _]+', '-', 'g') AS urn,
+               || {_sql_slug('sname')} AS urn,
            etype AS entity_type, sname AS name,
            'mentions' AS pred, CAST(NULL AS VARCHAR) AS subj_urn,
            'HIGH' AS confidence
@@ -1541,7 +1550,7 @@ rows_ AS (
     SELECT conv_id, turn_idx, cpos, anchor, pred,
            CASE kind {rank_arms} END AS kind_rank,
            'urn:' || etype || ':'
-               || regexp_replace(lower(trim(obj_name)), '[ _]+', '-', 'g') AS obj,
+               || {_sql_slug('obj_name')} AS obj,
            row_number() OVER (PARTITION BY conv_id, turn_idx, kind
                               ORDER BY cpos) - 1 AS match_idx
     FROM verbs

@@ -347,6 +347,10 @@ def _capped_mid(sym: DataFrame, hub_cap: int) -> DataFrame:
     The global cap-smallest set is contained in the union of per-group
     cap-smallest sets, so the result is IDENTICAL to the single-window
     form (pinned by pytest) — only the physical plan changes.
+
+    Not lazy: step 1 collects the max hub degree while the plan is
+    BUILT, so calling this (and the two-hop functions that use it) runs
+    the degree-count job before the caller triggers any action.
     """
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     # vocabulary-sized (hub nodes only); _track registers it for the

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -31,7 +31,6 @@ class PipelineConfig:
     #: v2: entity-subject attribution for verb mentions
     #: v3: MEDIUM indirect tier + usedTool emission + E3 struct detection
     rules_version: str = "3"
-    extra: dict = field(default_factory=dict, hash=False, compare=False)
 
     @property
     def config_hash(self) -> str:

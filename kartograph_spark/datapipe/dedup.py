@@ -230,10 +230,14 @@ def embedding_neardup(
     would emit O(k^2 * bands) pairs (k = 10^6 -> 10^12 rows).  The same
     star-emission bucket cap as the MinHash path applies here on the
     (band, bucket) key: oversized buckets only emit pairs anchored at the
-    bucket-min vector — emission is linear in bucket size, every member
-    still appears in >= 1 pair (connected-components consumers see the
-    same clusters), and the switch is a deterministic window count the
-    DuckDB oracle mirrors bit-for-bit.  ``persist_buckets`` has the same
+    bucket-min vector — emission is linear in bucket size, and the
+    switch is a deterministic window count the DuckDB oracle mirrors
+    bit-for-bit.  Clusters survive the cap only when every member of an
+    oversized bucket is within the cosine threshold of the bucket-min
+    vector (true for the mass-duplicate case above): the exact cosine
+    filter drops an anchored pair whose member is farther, even if that
+    member is within the threshold of another member, so a connected-
+    components consumer can see such a bucket split.  ``persist_buckets`` has the same
     trade as near_dup_pairs (the banded_buckets Arrow pass runs once
     instead of once per join side).
     """

@@ -20,7 +20,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kartograph_spark import rules
@@ -50,11 +50,17 @@ class TableStore:
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None):
-        w = df.write.mode("overwrite")
+    def write(
+        self, df: DataFrame, name: str, partition_by: list[str] | None = None
+    ) -> int:
+        """Overwrite table ``name`` with ``df``; returns the rows written,
+        observed on the write job itself instead of a second count job."""
+        obs = Observation()
+        w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(name))
+        return int(obs.get["rows"])
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.path(name))

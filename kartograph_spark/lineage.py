@@ -16,6 +16,7 @@ partition overwrite per bucket, so a re-run of a bucket is idempotent
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -91,8 +92,11 @@ def record_completed(
 MARKER_DIR = "lineage_markers"
 
 
-def write_stage_marker(root: str, stage: str, config_hash: str) -> None:
-    """Record WHICH config's output currently occupies a stage's tables.
+def write_stage_marker(
+    root: str, stage: str, config_hash: str, counts: dict[str, int] | None = None
+) -> None:
+    """Record WHICH config's output currently occupies a stage's tables,
+    and the row counts its writes observed.
 
     Lineage rows are append-only per config hash, but stage outputs are
     last-writer-wins — after a config round-trip (run A, run B, run A)
@@ -100,21 +104,36 @@ def write_stage_marker(root: str, stage: str, config_hash: str) -> None:
     other config's data.  The marker is overwritten on every stage
     completion; resume requires marker == this config's hash, so a
     mismatch forces recompute instead of serving another config's
-    tables."""
+    tables.  The counts let a skipped stage report its tables' sizes
+    without re-reading them."""
     d = os.path.join(root, MARKER_DIR)
     os.makedirs(d, exist_ok=True)
     tmp = os.path.join(d, f"current_{stage}.json.tmp")
     with open(tmp, "w") as f:
-        json.dump({"stage": stage, "config_hash": config_hash}, f)
-    os.replace(tmp, os.path.join(d, f"current_{stage}.json"))
+        json.dump({"stage": stage, "config_hash": config_hash, "counts": counts}, f)
+    os.replace(tmp, _marker_path(root, stage))
 
 
-def read_stage_marker(root: str, stage: str) -> str | None:
-    p = os.path.join(root, MARKER_DIR, f"current_{stage}.json")
+def clear_stage_marker(root: str, stage: str) -> None:
+    """Drop a stage's marker before its tables are overwritten: a run
+    killed mid-overwrite then leaves no marker, and no config can resume
+    from the half-written tables."""
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(_marker_path(root, stage))
+
+
+def read_stage_marker(root: str, stage: str) -> dict:
+    """``{"stage", "config_hash", "counts"}`` of the stage's last
+    completion; empty when there is none."""
+    p = _marker_path(root, stage)
     if not os.path.exists(p):
-        return None
+        return {}
     with open(p) as f:
-        return json.load(f).get("config_hash")
+        return json.load(f)
+
+
+def _marker_path(root: str, stage: str) -> str:
+    return os.path.join(root, MARKER_DIR, f"current_{stage}.json")
 
 
 def write_metrics(root: str, metrics: dict) -> str:

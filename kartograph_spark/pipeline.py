@@ -21,6 +21,7 @@ across (pred,obj) combinations.
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +43,7 @@ from kartograph_spark.graph import (
     write_schema_artifacts,
 )
 from kartograph_spark.lineage import (
+    clear_stage_marker,
     completed_partitions,
     read_stage_marker,
     record_completed,
@@ -92,19 +94,22 @@ def run_mentions_stage(
     """Resumable extraction stage: skip buckets already done for this
     config hash (J8 anti-join semantics, orchestrator.py:589-597).
 
-    Stale-table guard: when the out dir's mentions table was last
-    written by a DIFFERENT config (lineage marker mismatch), every
-    bucket re-runs and the write is a FULL overwrite — the old config
-    may have used a different bucket count, so dynamic per-bucket
-    overwrite could leave its extra partitions in the table.
+    Stale-table guard: unless the lineage marker says the mentions table
+    was last completed by THIS config, every bucket re-runs and the write
+    is a FULL overwrite.  Another config may have used a different bucket
+    count, and a missing marker means the last writer died before
+    completing (or wrote no marker), so either way dynamic per-bucket
+    overwrite could leave foreign partitions in the table.  The old
+    marker is dropped before that overwrite, so a kill mid-write cannot
+    leave it vouching for a half-replaced table.
     """
     marker = read_stage_marker(store.root, "mentions")
-    stale = marker is not None and marker != cfg.config_hash
-    done = (
-        set()
-        if stale
-        else completed_partitions(spark, store.root, "mentions", cfg.config_hash)
-    )
+    stale = marker.get("config_hash") != cfg.config_hash
+    if stale:
+        clear_stage_marker(store.root, "mentions")
+        done = set()
+    else:
+        done = completed_partitions(spark, store.root, "mentions", cfg.config_hash)
     pending = [b for b in range(cfg.n_buckets) if b not in done]
 
     if pending:
@@ -138,34 +143,16 @@ def run_mentions_stage(
         got = obs.get
         counts = {b: int(got[f"b{b}"]) for b in pending}
         record_completed(store.root, "mentions", cfg.config_hash, counts)
-        write_stage_marker(store.root, "mentions", cfg.config_hash)
+    write_stage_marker(store.root, "mentions", cfg.config_hash)
     return spark.read.parquet(store.path("mentions")).drop("bucket")
 
 
-def build_triples(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    alias_dict: DataFrame,
-    cfg: PipelineConfig | None = None,
-    mentions: DataFrame | None = None,
+def _triple_stage(
+    canonical: DataFrame, transcripts: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Pure transformation composition (no store): returns (kept_triples,
-    broken_ref_report).  Used by run_pipeline and by in-memory callers
-    (__spark_entry__, bench)."""
-    cfg = cfg or PipelineConfig()
-    if mentions is None:
-        # persist: the mention frame feeds type-norm, pair generation and
-        # the canonical rewrite — without this the extraction UDF re-runs
-        # once per downstream action.  Only the UDF input needs the
-        # under-split guard; conversation_triples is a partial aggregation
-        # that parallelizes off the raw scan without a repartition shuffle.
-        salted = ensure_parallelism(spark, transcripts, cfg.salt_turns)
-        # surface is a debugging column no downstream stage reads — drop it
-        # before the cache so the corpus-sized persist carries less data
-        mentions = extract_mentions(salted).drop("surface").persist()
-    canonical, _cmap = canonicalize_mentions(
-        mentions, alias_dict, cfg.confidence_threshold
-    )
+    """Canonical mentions -> (kept_triples, broken_ref_report): emit ->
+    first-occurrence dedup -> uid resolution -> encode -> broken-ref
+    split."""
     raw = tr.mention_triples(canonical).unionByName(
         tr.conversation_triples(transcripts)
     )
@@ -186,6 +173,33 @@ def build_triples(
     return val.split_broken_refs(encoded)
 
 
+def build_triples(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    alias_dict: DataFrame,
+    cfg: PipelineConfig | None = None,
+    mentions: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Pure transformation composition (no store): returns (kept_triples,
+    broken_ref_report).  Used by in-memory callers (__spark_entry__,
+    bench); run_pipeline runs the same stages with stored outputs."""
+    cfg = cfg or PipelineConfig()
+    if mentions is None:
+        # persist: the mention frame feeds type-norm, pair generation and
+        # the canonical rewrite — without this the extraction UDF re-runs
+        # once per downstream action.  Only the UDF input needs the
+        # under-split guard; conversation_triples is a partial aggregation
+        # that parallelizes off the raw scan without a repartition shuffle.
+        salted = ensure_parallelism(spark, transcripts, cfg.salt_turns)
+        # surface is a debugging column no downstream stage reads — drop it
+        # before the cache so the corpus-sized persist carries less data
+        mentions = extract_mentions(salted).drop("surface").persist()
+    canonical, _cmap = canonicalize_mentions(
+        mentions, alias_dict, cfg.confidence_threshold
+    )
+    return _triple_stage(canonical, transcripts)
+
+
 #: whole-stage lineage sentinel: the global stages (canonical / triples /
 #: materialize) are all-or-nothing — canonicalization and the first-
 #: occurrence dedup are corpus-global aggregations, so there is no
@@ -195,21 +209,38 @@ def build_triples(
 STAGE_SENTINEL = -1
 
 
-def _stage_done(spark: SparkSession, root: str, stage: str, cfg) -> bool:
-    """Done = a lineage row for this config AND the stage's tables were
-    last written by this config (marker) — the lineage rows alone would
-    serve another config's overwritten tables after a config
-    round-trip."""
-    if read_stage_marker(root, stage) != cfg.config_hash:
-        return False
-    return STAGE_SENTINEL in completed_partitions(
-        spark, root, stage, cfg.config_hash
-    )
+def _run_stage(
+    spark: SparkSession,
+    root: str,
+    stage: str,
+    cfg: PipelineConfig,
+    write_tables: Callable[[], dict[str, int]],
+) -> dict[str, int]:
+    """Run a global stage unless this config completed it; returns the
+    counts its writes observed, read back from the marker when skipped.
 
-
-def _mark_stage(root: str, stage: str, cfg, rows: int) -> None:
+    Done = a lineage row for this config AND a marker saying the stage's
+    tables were last written by this config, with their counts — the
+    lineage rows alone would serve another config's overwritten tables
+    after a config round-trip, and a marker without counts predates
+    them.  The marker is dropped before the tables are overwritten, so a
+    kill mid-stage leaves no marker over half-written tables."""
+    marker = read_stage_marker(root, stage)
+    counts = marker.get("counts")
+    if (
+        counts
+        and marker["config_hash"] == cfg.config_hash
+        and STAGE_SENTINEL
+        in completed_partitions(spark, root, stage, cfg.config_hash)
+    ):
+        return counts
+    clear_stage_marker(root, stage)
+    counts = write_tables()
+    # the lineage row carries the size of the stage's first table
+    rows = next(iter(counts.values()))
     record_completed(root, stage, cfg.config_hash, {STAGE_SENTINEL: rows})
-    write_stage_marker(root, stage, cfg.config_hash)
+    write_stage_marker(root, stage, cfg.config_hash, counts)
+    return counts
 
 
 def run_pipeline(
@@ -228,7 +259,10 @@ def run_pipeline(
     report), ``materialize`` (graph/validation/report artifacts).  A
     re-run after a mid-stage kill skips each stage whose lineage row is
     present for this config hash and reads its stored output instead of
-    recomputing; outputs are overwrite-idempotent either way.
+    recomputing; outputs are overwrite-idempotent either way.  Every
+    table count in the rollup is observed on the write that produced the
+    table and kept in the stage marker, so fresh and resumed runs report
+    from the same source without re-reading the tables.
     """
     cfg = cfg or PipelineConfig()
     store = TableStore(spark, out_dir)
@@ -236,76 +270,81 @@ def run_pipeline(
 
     mentions = run_mentions_stage(spark, transcripts, store, cfg)
 
-    if _stage_done(spark, store.root, "canonical", cfg):
-        canonical = store.read("canonical_mentions")
-        cmap = store.read("canonical_map")
-    else:
+    def canonical_tables() -> dict[str, int]:
         canonical, cmap = canonicalize_mentions(
             mentions, alias_dict, cfg.confidence_threshold
         )
-        store.write(canonical, "canonical_mentions")
-        store.write(cmap, "canonical_map")
+        return {
+            "canonical_mentions": store.write(canonical, "canonical_mentions"),
+            "canonical_map": store.write(cmap, "canonical_map"),
+        }
+
+    def triple_tables() -> dict[str, int]:
+        kept, broken = _triple_stage(store.read("canonical_mentions"), transcripts)
+        return {
+            "triples": store.write(kept, "triples", partition_by=["pred"]),
+            "broken_refs": store.write(broken, "broken_refs"),
+        }
+
+    def materialize_tables() -> dict[str, int]:
         canonical = store.read("canonical_mentions")
-        cmap = store.read("canonical_map")
-        _mark_stage(store.root, "canonical", cfg, canonical.count())
-
-    if _stage_done(spark, store.root, "triples", cfg):
         kept = store.read("triples")
-        broken = store.read("broken_refs")
-    else:
-        raw = tr.mention_triples(canonical).unionByName(
-            tr.conversation_triples(transcripts)
+        errors = (
+            store.read("broken_refs")
+            .unionByName(val.find_orphans(kept))
+            .unionByName(val.record_errors(canonical))
         )
-        # persist + eager materialization mirrors build_triples: the uid-
-        # predicate collect doubles as the cache fill so the broken-ref
-        # split never recomputes the dedup-shuffle chain.
-        deduped = tr.dedup_first_occurrence(raw).persist()
-        resolved = tr.apply_uid_resolution(
-            deduped, tr.collect_uid_predicates(deduped)
-        )
-        encoded = tr.encode_final(resolved)
-        kept, broken = val.split_broken_refs(encoded)
-        store.write(kept, "triples", partition_by=["pred"])
-        store.write(broken, "broken_refs")
-        kept = store.read("triples")
-        broken = store.read("broken_refs")
-        _mark_stage(store.root, "triples", cfg, kept.count())
-
-    if not _stage_done(spark, store.root, "materialize", cfg):
-        orphans = val.find_orphans(kept)
-        rec_errors = val.record_errors(canonical)
-        errors = broken.unionByName(orphans).unionByName(rec_errors)
-        store.write(errors, "validation_errors")
-        store.write(val.validation_summary(errors), "validation_summary")
-        store.write(val.review_flags(canonical), "review_flags")
-        store.write(low_confidence_log(transcripts), "low_confidence_log")
-        store.write(build_nodes(kept), "graph_nodes", partition_by=["type"])
-        store.write(build_edges(kept), "graph_edges", partition_by=["pred"])
-        manifest = infer_schema_manifest(kept)
+        orphans = Observation()
+        is_orphan = F.col("message").startswith("orphan")
+        counts = {
+            "validation_errors": store.write(
+                errors.observe(orphans, F.count(F.when(is_orphan, 1)).alias("n")),
+                "validation_errors",
+            ),
+            "orphans": int(orphans.get["n"]),
+            "validation_summary": store.write(
+                val.validation_summary(errors), "validation_summary"
+            ),
+            "review_flags": store.write(val.review_flags(canonical), "review_flags"),
+            "low_confidence_log": store.write(
+                low_confidence_log(transcripts), "low_confidence_log"
+            ),
+            "graph_nodes": store.write(
+                build_nodes(kept), "graph_nodes", partition_by=["type"]
+            ),
+            "graph_edges": store.write(
+                build_edges(kept), "graph_edges", partition_by=["pred"]
+            ),
+        }
         write_schema_artifacts(
-            manifest, infer_type_predicates(kept), out_dir
+            infer_schema_manifest(kept), infer_type_predicates(kept), out_dir
         )
-        _mark_stage(
-            store.root, "materialize", cfg, store.read("graph_edges").count()
-        )
+        return counts
 
-    triples_out = store.read("triples")
-    errors = store.read("validation_errors")
+    canon = _run_stage(spark, store.root, "canonical", cfg, canonical_tables)
+    trip = _run_stage(spark, store.root, "triples", cfg, triple_tables)
+    mat = _run_stage(spark, store.root, "materialize", cfg, materialize_tables)
+
     dur = time.time() - t0
-    n_triples = triples_out.count()
+    corpus = transcripts.agg(
+        F.count(F.lit(1)).alias("turns"),
+        F.countDistinct("conv_id").alias("conversations"),
+    ).first()
+    n_triples = trip["triples"]
     metrics = {
-        "turns": transcripts.count(),
-        "conversations": transcripts.select("conv_id").distinct().count(),
+        "turns": corpus["turns"],
+        "conversations": corpus["conversations"],
         "mentions": mentions.count(),
-        "merged_entities": cmap.count(),
-        "entities": val.node_urns(triples_out).count(),
-        "edges": store.read("graph_edges").count(),
+        "merged_entities": canon["canonical_map"],
+        # build_nodes keeps one row per typed URN
+        "entities": mat["graph_nodes"],
+        "edges": mat["graph_edges"],
         "triples": n_triples,
-        "broken_refs": store.read("broken_refs").count(),
-        "orphans": errors.filter(F.col("message").startswith("orphan")).count(),
-        "review_flags": store.read("review_flags").count(),
-        "low_confidence_logged": store.read("low_confidence_log").count(),
-        "validation_errors": errors.count(),
+        "broken_refs": trip["broken_refs"],
+        "orphans": mat["orphans"],
+        "review_flags": mat["review_flags"],
+        "low_confidence_logged": mat["low_confidence_log"],
+        "validation_errors": mat["validation_errors"],
         "duration_secs": round(dur, 3),
         "triples_per_sec": round(n_triples / dur, 1) if dur > 0 else None,
         "config_hash": cfg.config_hash,
@@ -325,6 +364,7 @@ def run_pipeline(
     }
     save_metrics_reports(out_dir, metrics, ebt)
     save_validation_reports(
-        out_dir, errors.limit(100_000).toPandas()[ERROR_COLS]
+        out_dir,
+        store.read("validation_errors").limit(100_000).toPandas()[ERROR_COLS],
     )
     return metrics

@@ -53,6 +53,21 @@ def summarize(name: str, text: str) -> str:
     return f"{name}: {', '.join(flags)}"
 
 
+def write_plan(path: str, name: str, build) -> str:
+    """Write the plan of the DataFrame ``build()`` returns to ``path`` and
+    return its summary line.  A failed explain is flagged in the summary
+    but never replaces an existing plan file with a failure stub."""
+    try:
+        text = plan_text(build())
+    except Exception as e:  # plan-only failures should be visible
+        if os.path.exists(path):
+            return f"{name}: !! EXPLAIN FAILED, previous plan kept: {e}"
+        text = f"EXPLAIN FAILED: {e}"
+    with open(path, "w") as f:
+        f.write(text)
+    return summarize(name, text)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark("plans", master="local[4]", shuffle_partitions=8)
@@ -96,15 +111,14 @@ def main() -> None:
 
     queries["kg_pipeline_large (10x corpus)"] = large_pipeline
 
-    lines = []
-    for name, fn in queries.items():
-        try:
-            text = plan_text(fn(spark, sf_dir))
-        except Exception as e:  # plan-only failures should be visible
-            text = f"EXPLAIN FAILED: {e}"
-        with open(os.path.join(out_dir, f"{name.split(' ')[0]}.txt"), "w") as f:
-            f.write(text)
-        lines.append(summarize(name, text))
+    lines = [
+        write_plan(
+            os.path.join(out_dir, f"{name.split(' ')[0]}.txt"),
+            name,
+            lambda fn=fn: fn(spark, sf_dir),
+        )
+        for name, fn in queries.items()
+    ]
 
     with open(os.path.join(out_dir, "SUMMARY.txt"), "w") as f:
         f.write("\n".join(lines) + "\n")
