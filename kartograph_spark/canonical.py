@@ -8,12 +8,14 @@ never corpus-sized, so the mention table is never shuffled here.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kartograph_spark import rules
 from kartograph_spark.components import canonical_map
 from kartograph_spark.linking import alias_norm_col
+from kartograph_spark.session import local_frame
 
 
 def build_type_normalization(mentions: DataFrame) -> DataFrame:
@@ -27,11 +29,10 @@ def build_type_normalization(mentions: DataFrame) -> DataFrame:
     counts = mentions.groupBy("entity_type").agg(F.count(F.lit(1)).alias("n"))
     pdf = counts.toPandas()
     norm = rules.build_type_norm_map(pdf) if len(pdf) else {}
-    spark = mentions.sparkSession
-    if not norm:
-        return spark.createDataFrame([], "entity_type string, canonical_type string")
-    return spark.createDataFrame(
-        list(norm.items()), "entity_type string, canonical_type string"
+    return local_frame(
+        mentions.sparkSession,
+        pd.DataFrame(list(norm.items()), columns=["entity_type", "canonical_type"]),
+        "entity_type string, canonical_type string",
     )
 
 
@@ -176,8 +177,8 @@ def canonicalize_mentions(
     # collect jobs whose scheduling latency is pure Amdahl overhead.
     alias_pdf = alias_dict.toPandas()
     # explicit schema: an empty dictionary (or an all-null column) cannot
-    # be inferred from the pandas frame and would raise at createDataFrame
-    alias_local = spark.createDataFrame(alias_pdf, schema=alias_dict.schema)
+    # be inferred from the pandas frame
+    alias_local = local_frame(spark, alias_pdf, alias_dict.schema)
 
     pairs = coreference_pairs(typed, alias_local, confidence_threshold)
     cmap = canonical_map(pairs, preferred=set(alias_pdf["canonical_urn"]))
@@ -214,11 +215,10 @@ def canonicalize_mentions(
         .reset_index()
         .rename(columns={"canonical_urn": "urn"})
     )
-    meta_schema = "urn string, _dict_type string, _dict_name string"
-    dict_meta = (
-        spark.createDataFrame(meta_pdf[["urn", "_dict_type", "_dict_name"]])
-        if len(meta_pdf)
-        else spark.createDataFrame([], meta_schema)
+    dict_meta = local_frame(
+        spark,
+        meta_pdf[["urn", "_dict_type", "_dict_name"]],
+        "urn string, _dict_type string, _dict_name string",
     )
     final = (
         rewritten.join(F.broadcast(dict_meta), "urn", "left")

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kartograph_spark.session import local_frame
+
 MAX_ROUNDS = 25
 
 #: persisted intermediates from the graph-analytics operators below
@@ -172,11 +174,9 @@ def connected_components(
             {"member": list(parent)},
         )
         pdf["component"] = [_uf_find(parent, m) for m in pdf["member"]]
-        # Arrow-path createDataFrame: per-row pickling of a 10^5-row map
-        # is driver-serial time charged against the 4N side
-        return pairs.sparkSession.createDataFrame(
-            pdf, schema="member string, component string"
-        )
+        # Arrow local relation: per-row pickling of a 10^5-row map is
+        # driver-serial time charged against the 4N side
+        return local_frame(pairs.sparkSession, pdf, "member string, component string")
 
     edges = (
         pairs.select(F.col("src").alias("u"), F.col("dst").alias("v"))
@@ -478,13 +478,8 @@ def canonical_map(
     if small is not None:
         import pandas as pd
 
-        spark = pairs.sparkSession
-        if not small:
-            return spark.createDataFrame(
-                [], "member_urn string, canonical_urn string"
-            )
         parent = _union_find(small)
-        if preferred is None:
+        if preferred is None or not parent:
             pref: set = set()
         elif isinstance(preferred, set):
             pref = preferred
@@ -498,8 +493,8 @@ def canonical_map(
             canon = min((m not in pref, m) for m in members)[1]
             out.extend((m, canon) for m in members if m != canon)
         pdf = pd.DataFrame(out, columns=["member_urn", "canonical_urn"])
-        return spark.createDataFrame(
-            pdf, schema="member_urn string, canonical_urn string"
+        return local_frame(
+            pairs.sparkSession, pdf, "member_urn string, canonical_urn string"
         )
 
     labels = connected_components(

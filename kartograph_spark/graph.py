@@ -12,7 +12,11 @@ Outputs:
 
 Table format: Iceberg when the runtime is on the classpath, else
 partitioned parquet with identical layout (TableStore below) — the write
-API is format-agnostic so a real cluster flips one config.
+API is format-agnostic so a real cluster flips one config.  Partitioned
+writes are clustered on their partition columns (a ``rebalance`` hint,
+the analog of Iceberg's ``hash`` write distribution): one file per
+partition value per advisory-size chunk, instead of one per write task
+and value.
 """
 
 from __future__ import annotations
@@ -54,8 +58,13 @@ class TableStore:
         self, df: DataFrame, name: str, partition_by: list[str] | None = None
     ) -> int:
         """Overwrite table ``name`` with ``df``; returns the rows written,
-        observed on the write job itself instead of a second count job."""
+        observed on the write job itself instead of a second count job.
+        A partitioned write is first rebalanced on its partition columns,
+        so each task writes one partition value rather than a file per
+        value it happens to hold."""
         obs = Observation()
+        if partition_by:
+            df = df.hint("rebalance", *partition_by)
         w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -163,16 +172,14 @@ def infer_schema_manifest(triples: DataFrame) -> list[dict]:
     any uid observation -> uid; mixed scalars -> string; else the single
     observed scalar type.  Also records per-predicate triple counts and
     the reference's index selection (load_dgraph.py:229-265)."""
-    agg = (
-        triples.groupBy("pred")
-        .agg(
-            F.sort_array(F.collect_set("dtype")).alias("observed"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .orderBy("pred")
+    agg = triples.groupBy("pred").agg(
+        F.sort_array(F.collect_set("dtype")).alias("observed"),
+        F.count(F.lit(1)).alias("n"),
     )
     out = []
-    for r in agg.collect():
+    # sorted on the driver: the aggregate is vocabulary-sized, and a Spark
+    # orderBy would cost a range-sampling job plus a shuffle
+    for r in sorted(agg.collect(), key=lambda r: r["pred"]):
         observed = list(r["observed"])
         if "uid" in observed:
             resolved = "uid"
@@ -213,11 +220,10 @@ def infer_type_predicates(triples: DataFrame) -> list[dict]:
         .join(types, "subj")
         .groupBy("type")
         .agg(F.sort_array(F.collect_set("pred")).alias("predicates"))
-        .orderBy("type")
     )
     return [
         {"type": r["type"], "predicates": list(r["predicates"])}
-        for r in agg.collect()
+        for r in sorted(agg.collect(), key=lambda r: r["type"])
     ]
 
 

@@ -121,8 +121,12 @@ def run_mentions_stage(
         # applied only when the scan is under-split (extraction is per-turn,
         # so splitting is semantics-free and a well-split scan needs none).
         sub = ensure_parallelism(spark, sub, cfg.salt_turns)
-        mentions = extract_mentions(sub).withColumn(
-            "bucket", bucket_col(cfg.n_buckets)
+        # clustered on the bucket like every partitioned TableStore write:
+        # one file per bucket directory instead of one per task
+        mentions = (
+            extract_mentions(sub)
+            .withColumn("bucket", bucket_col(cfg.n_buckets))
+            .hint("rebalance", "bucket")
         )
         # Per-bucket lineage counts ride the write job as observed metrics
         # (count(CASE bucket) per pending bucket) instead of re-reading and
@@ -149,10 +153,11 @@ def run_mentions_stage(
 
 def _triple_stage(
     canonical: DataFrame, transcripts: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Canonical mentions -> (kept_triples, broken_ref_report): emit ->
-    first-occurrence dedup -> uid resolution -> encode -> broken-ref
-    split."""
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Canonical mentions -> (kept_triples, broken_ref_report, cache):
+    emit -> first-occurrence dedup -> uid resolution -> encode ->
+    broken-ref split.  ``cache`` is the persisted dedup frame both
+    outputs read; the caller unpersists it once it is done with them."""
     raw = tr.mention_triples(canonical).unionByName(
         tr.conversation_triples(transcripts)
     )
@@ -170,7 +175,7 @@ def _triple_stage(
         deduped, tr.collect_uid_predicates(deduped)
     )
     encoded = tr.encode_final(resolved)
-    return val.split_broken_refs(encoded)
+    return (*val.split_broken_refs(encoded), deduped)
 
 
 def build_triples(
@@ -197,7 +202,10 @@ def build_triples(
     canonical, _cmap = canonicalize_mentions(
         mentions, alias_dict, cfg.confidence_threshold
     )
-    return _triple_stage(canonical, transcripts)
+    # the returned frames read the dedup cache lazily, so it stays
+    # persisted for the caller's actions
+    kept, broken, _cache = _triple_stage(canonical, transcripts)
+    return kept, broken
 
 
 #: whole-stage lineage sentinel: the global stages (canonical / triples /
@@ -280,11 +288,16 @@ def run_pipeline(
         }
 
     def triple_tables() -> dict[str, int]:
-        kept, broken = _triple_stage(store.read("canonical_mentions"), transcripts)
-        return {
-            "triples": store.write(kept, "triples", partition_by=["pred"]),
-            "broken_refs": store.write(broken, "broken_refs"),
-        }
+        kept, broken, cache = _triple_stage(
+            store.read("canonical_mentions"), transcripts
+        )
+        try:
+            return {
+                "triples": store.write(kept, "triples", partition_by=["pred"]),
+                "broken_refs": store.write(broken, "broken_refs"),
+            }
+        finally:
+            cache.unpersist()
 
     def materialize_tables() -> dict[str, int]:
         canonical = store.read("canonical_mentions")
@@ -302,8 +315,11 @@ def run_pipeline(
                 "validation_errors",
             ),
             "orphans": int(orphans.get["n"]),
+            # from the stored table: summarizing the ``errors`` plan would
+            # re-run the broken-ref read, the orphan joins and the rules
             "validation_summary": store.write(
-                val.validation_summary(errors), "validation_summary"
+                val.validation_summary(store.read("validation_errors")),
+                "validation_summary",
             ),
             "review_flags": store.write(val.review_flags(canonical), "review_flags"),
             "low_confidence_log": store.write(

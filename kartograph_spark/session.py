@@ -16,7 +16,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -57,3 +58,17 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, pdf, schema: str | StructType) -> DataFrame:
+    """A driver-built pandas frame as a JVM local relation.
+
+    ``createDataFrame`` on a list of rows, or on an EMPTY pandas frame,
+    yields a Python-worker-backed RDD (``applySchemaToPythonRDD``) that
+    every plan broadcasting the frame re-runs on Python workers.  An
+    Arrow table always becomes a ``LocalTableScan``, and an empty one
+    lets the optimizer drop a left join against it outright.
+    """
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), schema)

@@ -1,11 +1,15 @@
 """Type normalization + linking rules (A3/J6/J7, FIXTURES F4 type-case
 variants: Service vs service vs Services -> Service)."""
 
+import io
+from contextlib import redirect_stdout
+
 import pandas as pd
+import pytest
 
 from kartograph_spark import rules
 from kartograph_spark.canonical import canonicalize_mentions
-from kartograph_spark.extraction.mentions import MENTION_SCHEMA
+from kartograph_spark.extraction.mentions import MENTION_SCHEMA, extract_mentions
 from kartograph_spark.linking import link_pairs, load_alias_dictionary
 
 
@@ -153,3 +157,19 @@ def test_coreference_pairs_single_scan_equivalence(spark):
     )
     new = set(map(tuple, coreference_pairs(m, al, 0.85).collect()))
     assert old == new and len(new) == 12
+
+
+@pytest.mark.parametrize("empty_dict", [False, True], ids=["corpus", "empty-dict"])
+def test_canonical_plan_has_no_python_row_scan(
+    spark, transcripts_df, alias_df, empty_dict
+):
+    """The driver-built maps (type norm, alias dictionary, canonical map,
+    dictionary metadata) are JVM local relations: no plan over the
+    canonical mentions re-runs Python workers to scan them."""
+    alias = alias_df.limit(0) if empty_dict else alias_df
+    canonical, _cmap = canonicalize_mentions(extract_mentions(transcripts_df), alias)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        canonical.explain("formatted")
+    assert "LocalTableScan" in buf.getvalue()
+    assert "applySchemaToPythonRDD" not in buf.getvalue()

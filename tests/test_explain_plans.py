@@ -1,4 +1,5 @@
-"""tools/explain_plans.py never replaces a plan file with a failure stub."""
+"""tools/explain_plans.py never replaces a plan file with a failure stub,
+and flags scans of Python-built rows."""
 
 import importlib.util
 import os
@@ -39,3 +40,13 @@ def test_failed_explain_without_plan_writes_stub(tmp_path):
     line = tool.write_plan(str(path), "q", _fail)
     assert path.read_text() == "EXPLAIN FAILED: corpus absent"
     assert line.startswith("q: ")
+
+
+def test_summary_flags_python_row_scan(spark):
+    import pandas as pd
+
+    tool = _tool()
+    rows = spark.createDataFrame([("a",)], "k string")
+    local = spark.createDataFrame(pd.DataFrame({"k": ["a"]}))
+    assert "!! PYTHON-ROW SCAN" in tool.summarize("q", tool.plan_text(rows))
+    assert "PYTHON-ROW SCAN" not in tool.summarize("q", tool.plan_text(local))

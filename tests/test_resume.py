@@ -383,3 +383,56 @@ def test_stage_killed_mid_overwrite_is_not_resumed(spark, monkeypatch):
     lin2 = read_lineage(spark, out).toPandas()
     rerun = lin2[lin2["finished_at"] > lin["finished_at"].max()]
     assert "triples" in set(rerun[rerun["config_hash"] == cfg_a.config_hash]["stage"])
+
+
+def _files_per_partition(out, table) -> dict[str, int]:
+    """parquet files in each partition directory of ``table``."""
+    return {
+        os.path.basename(d): len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(os.path.join(out, table, "*=*"))
+    }
+
+
+def test_partitioned_tables_hold_one_file_per_partition(
+    spark, transcripts_df, alias_df
+):
+    """Partitioned writes are clustered by their partition columns: each
+    partition directory holds one file, also after a resume that re-runs
+    some mention buckets with dynamic partition overwrite."""
+    from kartograph_spark.pipeline import run_pipeline
+
+    cfg = PipelineConfig(n_buckets=8)
+    out = tempfile.mkdtemp(prefix="kg-layout-")
+    run_pipeline(spark, transcripts_df, alias_df, out, cfg)
+    tables = ("triples", "graph_edges", "graph_nodes", "mentions")
+    for t in tables:
+        files = _files_per_partition(out, t)
+        assert files and set(files.values()) == {1}, (t, files)
+
+    # forget three mention buckets: the rerun re-extracts only those
+    lin = read_lineage(spark, out).toPandas()
+    lost = {1, 4, 6}
+    survivors = lin[~((lin["stage"] == "mentions") & lin["partition_id"].isin(lost))]
+    for f in glob.glob(os.path.join(out, LINEAGE_DIR, "*.parquet")):
+        os.remove(f)
+    for _, r in survivors.iterrows():
+        record_completed(
+            out, r["stage"], r["config_hash"], {int(r["partition_id"]): int(r["rows"])}
+        )
+    lin_mid = read_lineage(spark, out).toPandas()
+    run_pipeline(spark, transcripts_df, alias_df, out, cfg)
+    lin2 = read_lineage(spark, out).toPandas()
+    redone = lin2[lin2["finished_at"] > lin_mid["finished_at"].max()]
+    assert set(redone["partition_id"]) == lost
+    assert set(_files_per_partition(out, "mentions").values()) == {1}
+
+
+def test_run_pipeline_releases_its_cache(spark):
+    """run_pipeline unpersists the dedup cache of its triple stage."""
+    from kartograph_spark.pipeline import run_pipeline
+
+    tr, al = _tiny_corpus(spark)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    run_pipeline(spark, tr, al, tempfile.mkdtemp(prefix="kg-cache-"), PipelineConfig())
+    assert persistent().size() == before

@@ -6,7 +6,9 @@ whole-stage codegen.  Explain only (no job execution), so this is cheap.
 A summary line per plan flags: PushedFilters present, BroadcastHashJoin
 used, number of WholeStageCodegen spans, any row-at-a-time Python eval
 (BatchEvalPython — should NEVER appear; ArrowEvalPython/MapInPandas are
-the vectorized forms and are fine).
+the vectorized forms and are fine), and any scan of Python-built rows
+(``applySchemaToPythonRDD`` — driver-built frames should be Arrow local
+relations).
 """
 
 from __future__ import annotations
@@ -48,6 +50,10 @@ def summarize(name: str, text: str) -> str:
         flags.append("!! CARTESIAN PRODUCT")
     if "BatchEvalPython" in text:
         flags.append("!! ROW-AT-A-TIME PYTHON")
+    if "applySchemaToPythonRDD" in text:
+        # a Scan ExistingRDD of createDataFrame(list) rows: every plan
+        # that reads it re-runs Python workers (Arrow frames are local)
+        flags.append("!! PYTHON-ROW SCAN")
     if "MapInPandas" in text or "ArrowEvalPython" in text:
         flags.append("arrow-udf")
     return f"{name}: {', '.join(flags)}"
