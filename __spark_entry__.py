@@ -38,8 +38,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# KG pipeline over deterministic synthetic transcripts (rows-only check;
-# the pytest oracle asserts exact triple-set equality on this pipeline)
+# KG pipeline over deterministic synthetic transcripts (hash-checked
+# against the DuckDB pipeline oracle, _pipeline_oracle_sql)
 # --------------------------------------------------------------------------
 
 _SYNTH_CACHE: dict[str, str] = {}
@@ -178,9 +178,7 @@ def _kg_review_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = spark.read.parquet(f"{d}/transcripts.parquet")
     alias = spark.read.parquet(f"{d}/alias_dictionary.parquet")
     canonical, _cmap = canonicalize_mentions(extract_mentions(tr), alias)
-    return val.review_flags(canonical).select(
-        "conv_id", "turn_idx", "kind", "subj", "pred", "obj"
-    )
+    return val.review_flags(canonical)
 
 
 def _kg_low_conf_log(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1429,6 +1427,36 @@ uidp AS (SELECT DISTINCT pred FROM t_ded WHERE obj_is_ref)
 """
 
 
+def _review_flags_oracle_sql(path: str) -> str:
+    """DuckDB twin of run_pipeline's ``review_flags`` table: the MEDIUM-tier
+    relationships of the canonicalized mention frame (``mfinal`` of the
+    full pipeline query), withheld from the graph for review."""
+    return _pipeline_oracle_sql(
+        path,
+        final_select="""SELECT conv_id, CAST(turn_idx AS BIGINT) AS turn_idx, kind,
+       coalesce(subj_urn, 'urn:Conversation:' || conv_id) AS subj,
+       pred, urn AS obj, confidence,
+       'indirect mention: relationship flagged for review' AS message
+FROM mfinal WHERE confidence = 'MEDIUM'""",
+    )
+
+
+def _low_log_oracle_sql(path: str) -> str:
+    """DuckDB twin of run_pipeline's ``low_confidence_log`` table: one
+    independent regexp scan per LOW pattern (logged, never extracted)."""
+    from kartograph_spark import rules
+
+    return "\nUNION ALL\n".join(
+        f"""SELECT conv_id, CAST(turn_idx AS BIGINT) AS turn_idx,
+       '{kind}' AS kind,
+       generate_subscripts(regexp_extract_all(text, '{pat}', 0), 1) - 1 AS match_idx,
+       unnest(regexp_extract_all(text, '{pat}', 0)) AS surface,
+       '{reason}' AS reason
+FROM read_parquet('{path}')"""
+        for kind, pat, reason in rules.LOW_PATTERNS
+    )
+
+
 def _pii_scrub_sql(path: str) -> str:
     """DuckDB twin of quality.pii_scrub: identical patterns (shared
     constants), identical email -> ip -> phone replacement order."""
@@ -1571,19 +1599,9 @@ SELECT conv_id, turn_idx,
 FROM dd WHERE rn = 1
 """
 
-    low_arms = "\nUNION ALL\n".join(
-        f"""SELECT conv_id, CAST(turn_idx AS BIGINT) AS turn_idx,
-       '{kind}' AS kind,
-       generate_subscripts(regexp_extract_all(text, '{pat}', 0), 1) - 1 AS match_idx,
-       unnest(regexp_extract_all(text, '{pat}', 0)) AS surface,
-       '{reason}' AS reason
-FROM tr"""
-        for kind, pat, reason in rules.LOW_PATTERNS
-    )
-
     return {
         "kg_transcript_mentions": mentions_sql,
-        "kg_low_conf_log": f"WITH {tr_cte}\n{low_arms}",
+        "kg_low_conf_log": _low_log_oracle_sql(path),
         "kg_entity_edges": edges_sql(
             "PARTITION BY conv_id, turn_idx ORDER BY cpos"
         ),
@@ -1596,13 +1614,7 @@ FROM tr"""
         ),
         "kg_pii_scrub": _pii_scrub_sql(path),
         "kg_pipeline_synthetic": _pipeline_oracle_sql(path),
-        "kg_review_flags": _pipeline_oracle_sql(
-            path,
-            final_select="""SELECT conv_id, CAST(turn_idx AS BIGINT) AS turn_idx, kind,
-       coalesce(subj_urn, 'urn:Conversation:' || conv_id) AS subj,
-       pred, urn AS obj
-FROM mfinal WHERE confidence = 'MEDIUM'""",
-        ),
+        "kg_review_flags": _review_flags_oracle_sql(path),
         # MATERIALIZED below is load-bearing: DuckDB inlines CTEs by
         # default, and these graph oracles reference the pipeline CTE
         # several times — without it the whole pipeline SQL re-evaluates

@@ -8,8 +8,10 @@ the E1 URN-mention regex (EntityExtractor.ts:18-49), the E4 pattern classes
 patterns (docs/PROCESS.md:2123-2199).
 
 Everything is ``pd.Series.str.extractall`` — one regex pass per pattern
-class per Arrow batch, no per-row Python.  The same function body runs
-inside the Spark ``mapInPandas`` UDF and inside the pure-pandas oracle.
+class per Arrow batch, no per-row Python.  It runs inside the Spark
+``mapInPandas`` UDF.  The DuckDB oracle (``__spark_entry__``) re-derives
+the same extraction in SQL and shares only the rule constants, so the
+tests that compare the two can catch a bug here.
 
 Output row = one candidate mention:
   (conv_id, turn_idx, kind, match_idx, kind_rank, urn, entity_type,

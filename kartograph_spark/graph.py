@@ -5,18 +5,16 @@ Outputs:
   partitioned by ``type`` — node attrs follow FIRST-occurrence semantics
   under stable ordering (W1, urn_deduplicator.py:54-90 'first' strategy).
 - ``graph_edges(subj, pred, obj, conv_id, turn_idx)`` partitioned by
-  ``pred`` (the Iceberg-partitioning analog of Dgraph's per-predicate
+  ``pred`` (the partitioning analog of Dgraph's per-predicate
   indexes, load_dgraph.py:229-265).
 - schema manifest — per-predicate resolved dtype with uid>string
   precedence (load_dgraph.py:86-206), derived as an aggregation (A6).
 
-Table format: Iceberg when the runtime is on the classpath, else
-partitioned parquet with identical layout (TableStore below) — the write
-API is format-agnostic so a real cluster flips one config.  Partitioned
-writes are clustered on their partition columns (a ``rebalance`` hint,
-the analog of Iceberg's ``hash`` write distribution): one file per
-partition value per advisory-size chunk, instead of one per write task
-and value.
+Table format: every table is a parquet directory under the output root
+(TableStore below), Hive-style partitioned (``col=value/`` subdirectories)
+when the write names partition columns.  Partitioned writes are clustered
+on their partition columns (a ``rebalance`` hint): one file per partition
+value per advisory-size chunk, instead of one per write task and value.
 """
 
 from __future__ import annotations
@@ -30,26 +28,13 @@ from pyspark.sql import functions as F
 from kartograph_spark import rules
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.spark.SparkCatalog  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
 class TableStore:
-    """Minimal table-format abstraction: Iceberg if present, else parquet.
-
-    On a real cluster with an Iceberg catalog configured, writes become
-    ``writeTo(...).createOrReplace()`` against the catalog; in this sandbox
-    (no Iceberg jars) identical partitioned parquet layout is used.
-    """
+    """Named parquet tables under one root directory: table ``name`` is
+    the directory ``root/name``, overwritten whole on each write."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.iceberg = _iceberg_available(spark)
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)

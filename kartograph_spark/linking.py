@@ -26,7 +26,9 @@ from pyspark.sql import functions as F
 
 
 def alias_norm_col(col):
-    """Spark-side mirror of rules.alias_norm."""
+    """Blocking key for entity linking: lower, runs of '-', '_' and
+    whitespace -> one space, trimmed.  The alias dictionary stores its
+    keys under the same normalization."""
     return F.trim(F.regexp_replace(F.lower(col), r"[-_\s]+", " "))
 
 

@@ -1,9 +1,11 @@
 """Deterministic extraction rule set — the single source of truth.
 
-Both the Spark pipeline (pandas/Arrow UDFs) and the pure-pandas oracle
-import THIS module, so rule parity is by construction; correctness vs the
-reference is pinned separately by unit tests transcribed from the
-reference's own test cases.
+The Spark pipeline (pandas/Arrow UDFs and Spark column expressions) and
+the DuckDB oracle in ``__spark_entry__`` both read the pattern tables and
+constants defined here; the oracle re-derives every stage in SQL, so it
+shares rule constants with the engine but no extraction code.
+Correctness vs the reference is pinned separately by unit tests
+transcribed from the reference's own test cases.
 
 Reference semantics captured here:
 
@@ -15,9 +17,9 @@ Reference semantics captured here:
 - Free-text verb patterns ("uses X", "deployed via X", "maintained by Y
   team", "written in Z"), HIGH-confidence tier only:
   /root/reference/extraction/docs/PROCESS.md:2123-2199
-- Predicate-name cleaning: /root/reference/extraction/load_dgraph.py:357-382
-- Literal formatting + sanitization: /root/reference/extraction/load_dgraph.py:384-417
 - URN percent-encoding keeping ':': /root/reference/extraction/load_dgraph.py:351-355
+  (predicate cleaning and literal formatting, load_dgraph.py:357-417, are
+  Spark column functions in triples.py)
 - URN / type-name validity: /root/reference/extraction/kg_extractor/models.py:41-69
 
 All functions are vectorized over ``pandas.Series`` (no per-row Python in
@@ -345,31 +347,10 @@ def slugify(name: pd.Series) -> pd.Series:
     )
 
 
-def alias_norm(name: pd.Series) -> pd.Series:
-    """Blocking key for entity linking: lower, [-_]+ and whitespace -> single
-    space, trimmed.  The alias dictionary stores the same normalization."""
-    return (
-        name.str.lower()
-        .str.replace(r"[-_\s]+", " ", regex=True)
-        .str.strip()
-    )
-
-
-def clean_predicate(pred: pd.Series) -> pd.Series:
-    """load_dgraph.py:357-382 — strip '@', replace $ : / \\ with '_',
-    guard reserved ``uid`` and ``dgraph.`` namespace."""
-    p = pred.str.lstrip("@")
-    for ch in ("$", ":", "/", "\\"):
-        p = p.str.replace(ch, "_", regex=False)
-    p = p.mask(p == "uid", "_uid")
-    starts_reserved = p.str.startswith("dgraph.")
-    return p.mask(starts_reserved, "_" + p)
-
-
 # Percent-encoding equivalent to urllib.parse.quote(urn, safe=":") for the
 # character set that can appear in our URNs (load_dgraph.py:351-355).  '%'
-# must be first.  Kept as an explicit chain so it stays vectorized and is
-# reproducible in Spark SQL as the same regexp_replace chain.
+# must be first.  Kept as an explicit chain so triples.encode_urn_col and
+# the DuckDB oracle (_sql_urn_encode) apply the same replace chain.
 _URN_ENCODE_CHAIN: list[tuple[str, str]] = [
     ("%", "%25"),
     (" ", "%20"),
@@ -387,33 +368,6 @@ _URN_ENCODE_CHAIN: list[tuple[str, str]] = [
 ]
 
 
-def encode_urn(urn: pd.Series) -> pd.Series:
-    """Vectorized percent-encode keeping ':' (load_dgraph.py:351-355)."""
-    s = urn
-    for ch, rep in _URN_ENCODE_CHAIN:
-        s = s.str.replace(ch, rep, regex=False)
-    return s
-
-
-def escape_literal(val: pd.Series) -> pd.Series:
-    """String-literal escaping: backslash, double-quote, newline
-    (load_dgraph.py:401-407)."""
-    return (
-        val.str.replace("\\", "\\\\", regex=False)
-        .str.replace('"', '\\"', regex=False)
-        .str.replace("\n", "\\n", regex=False)
-    )
-
-
-def literal_is_dropped(escaped: pd.Series) -> pd.Series:
-    """load_dgraph.py:408-417 — drop strings containing braces/brackets or
-    exactly 'None' (serialized objects / null artifacts)."""
-    return (
-        escaped.str.contains(r"[{}\[\]]", regex=True, na=True)
-        | (escaped == "None")
-    )
-
-
 def normalize_type_stem(type_name: pd.Series) -> pd.Series:
     """Stem used to group type-case/plural variants
     (agent_deduplicator.py:273-285 analog): lowercase; drop one trailing
@@ -425,12 +379,6 @@ def normalize_type_stem(type_name: pd.Series) -> pd.Series:
         & ~low.str.endswith("ss")
     )
     return low.where(~plural, low.str.slice(0, -1))
-
-
-def pascal_fallback(stem: pd.Series) -> pd.Series:
-    """Fallback canonical type when no observed variant is valid PascalCase:
-    capitalize first letter of the stem."""
-    return stem.str.slice(0, 1).str.upper() + stem.str.slice(1)
 
 
 def _strip_plural(t: str) -> str:

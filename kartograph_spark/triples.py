@@ -34,7 +34,7 @@ from kartograph_spark.rules import _URN_ENCODE_CHAIN
 PROV_COLS = ("conv_id", "turn_idx", "kind_rank", "match_idx")
 
 
-# -- Spark mirrors of the vectorized string rules (rules.py) ---------------
+# -- N-Quads string rules (load_dgraph.py:351-417) --------------------------
 
 def encode_urn_col(c: Column) -> Column:
     """Percent-encode keeping ':' (load_dgraph.py:351-355)."""

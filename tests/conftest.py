@@ -35,13 +35,6 @@ def transcripts_pdf(corpus_dir):
 
 
 @pytest.fixture(scope="session")
-def alias_pdf(corpus_dir):
-    import pandas as pd
-
-    return pd.read_parquet(f"{corpus_dir}/alias_dictionary.parquet")
-
-
-@pytest.fixture(scope="session")
 def transcripts_df(spark, corpus_dir):
     return spark.read.parquet(f"{corpus_dir}/transcripts.parquet")
 
@@ -49,3 +42,15 @@ def transcripts_df(spark, corpus_dir):
 @pytest.fixture(scope="session")
 def alias_df(spark, corpus_dir):
     return spark.read.parquet(f"{corpus_dir}/alias_dictionary.parquet")
+
+
+@pytest.fixture(scope="session")
+def pipeline_out(spark, transcripts_df, alias_df):
+    """One run_pipeline over the corpus: (output dir, metrics)."""
+    from kartograph_spark.config import PipelineConfig
+    from kartograph_spark.pipeline import run_pipeline
+
+    out = tempfile.mkdtemp(prefix="kg-out-")
+    metrics = run_pipeline(spark, transcripts_df, alias_df, out, PipelineConfig(n_buckets=8))
+    yield out, metrics
+    shutil.rmtree(out, ignore_errors=True)

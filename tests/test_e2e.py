@@ -1,53 +1,38 @@
-"""End-to-end: Spark pipeline vs pure-pandas oracle on the deterministic
-synthetic corpus (FIXTURES F3; BASELINE.json: triple P/R >= 0.95 required,
-exact equality targeted)."""
-
-import tempfile
+"""End-to-end: run_pipeline's stored tables vs the DuckDB oracle
+(``__spark_entry__``'s ``*_oracle_sql`` queries) on the deterministic
+synthetic corpus (FIXTURES F3): exact row count and all-column row hash."""
 
 import pytest
+from oracle_check import TRIPLE_COLS, assert_matches_oracle, duckdb_frame
 
-from kartograph_spark.config import PipelineConfig
-from kartograph_spark.oracle.oracle import oracle_triples, triple_prf
-from kartograph_spark.pipeline import run_pipeline
+import __spark_entry__ as entry
 
 
 @pytest.fixture(scope="module")
-def pipeline_out(spark, transcripts_df, alias_df):
-    out = tempfile.mkdtemp(prefix="kg-out-")
-    cfg = PipelineConfig(n_buckets=8)
-    metrics = run_pipeline(spark, transcripts_df, alias_df, out, cfg)
-    return out, metrics
+def oracle_path(corpus_dir):
+    return f"{corpus_dir}/transcripts.parquet"
 
 
-def test_triples_match_oracle(spark, pipeline_out, transcripts_pdf, alias_pdf):
+def test_triples_match_oracle(spark, pipeline_out, oracle_path):
+    """Every triple with its first-occurrence provenance (conv_id,
+    turn_idx) equals the oracle's, row for row."""
     out, metrics = pipeline_out
-    actual = spark.read.parquet(f"{out}/triples").toPandas()
-    expected = oracle_triples(transcripts_pdf, alias_pdf)
-    prf = triple_prf(actual, expected)
-    assert prf["precision"] >= 0.95, prf
-    assert prf["recall"] >= 0.95, prf
-    # target: exact set equality
-    assert prf["precision"] == 1.0 and prf["recall"] == 1.0, prf
+    actual = spark.read.parquet(f"{out}/triples").toPandas()[TRIPLE_COLS]
+    assert len(actual) == metrics["triples"] > 0
+    assert_matches_oracle(actual, duckdb_frame(entry._pipeline_oracle_sql(oracle_path)))
 
 
-def test_first_occurrence_provenance_matches_oracle(
-    spark, pipeline_out, transcripts_pdf, alias_pdf
-):
+def test_first_occurrence_provenance_matches_oracle(spark, pipeline_out, oracle_path):
+    """Each (subj, pred, obj) is stored once, and carries the oracle's
+    first-occurrence (conv_id, turn_idx)."""
     out, _ = pipeline_out
-    actual = (
-        spark.read.parquet(f"{out}/triples")
-        .toPandas()
-        .sort_values(["subj", "pred", "obj"])
-        .reset_index(drop=True)
-    )
-    expected = (
-        oracle_triples(transcripts_pdf, alias_pdf)
-        .sort_values(["subj", "pred", "obj"])
-        .reset_index(drop=True)
-    )
-    merged = actual.merge(
-        expected, on=["subj", "pred", "obj"], suffixes=("_a", "_e")
-    )
+    key = ["subj", "pred", "obj"]
+    actual = spark.read.parquet(f"{out}/triples").toPandas()
+    expected = duckdb_frame(entry._pipeline_oracle_sql(oracle_path))
+    assert not actual.duplicated(key).any()
+    assert not expected.duplicated(key).any()
+    merged = actual.merge(expected, on=key, how="outer", suffixes=("_a", "_e"), indicator=True)
+    assert (merged["_merge"] == "both").all()
     assert (merged["conv_id_a"] == merged["conv_id_e"]).all()
     assert (
         merged["turn_idx_a"].astype("int64") == merged["turn_idx_e"].astype("int64")
@@ -150,18 +135,14 @@ def test_report_sinks_written(pipeline_out):
     assert f"- **Triples**: {metrics['triples']:,}" in md
 
 
-def test_review_flags_match_oracle(spark, pipeline_out, transcripts_pdf, alias_pdf):
+def test_review_flags_match_oracle(spark, pipeline_out, oracle_path):
     """MEDIUM-tier relationships land in review_flags (not in the graph)
-    and match the pandas oracle exactly."""
-    from kartograph_spark.oracle.oracle import oracle_review_flags
+    and match the oracle exactly."""
+    import urllib.parse
 
     out, metrics = pipeline_out
     actual = spark.read.parquet(f"{out}/review_flags").toPandas()
-    expected = oracle_review_flags(transcripts_pdf, alias_pdf)
-    key = ["conv_id", "turn_idx", "subj", "pred", "obj"]
-    a = set(map(tuple, actual[key].itertuples(index=False)))
-    e = set(map(tuple, expected[key].itertuples(index=False)))
-    assert a == e
+    assert_matches_oracle(actual, duckdb_frame(entry._review_flags_oracle_sql(oracle_path)))
     assert len(actual) > 0  # the corpus plants MEDIUM phrases
     assert metrics["review_flags"] == len(actual)
     # the flagged predicates never appear as graph edges
@@ -169,11 +150,7 @@ def test_review_flags_match_oracle(spark, pipeline_out, transcripts_pdf, alias_p
     triples = spark.read.parquet(f"{out}/triples").toPandas()
     assert not (triples["pred"].isin(flagged_preds) & triples["obj_is_ref"]).any()
     # but the flagged entities DO exist as nodes (entity extracted)
-    import pandas as pd
-
-    from kartograph_spark import rules
-
-    enc_objs = set(rules.encode_urn(actual["obj"].drop_duplicates()))
+    enc_objs = {urllib.parse.quote(o, safe=":") for o in actual["obj"]}
     node_set = set(
         triples.loc[triples["pred"] == "dgraph.type", "subj"]
     )

@@ -537,17 +537,17 @@ def test_low_tier_never_reaches_extraction():
     assert len(out) == 0
 
 
-def test_low_log_in_pipeline_output(spark, transcripts_df, transcripts_pdf):
-    from kartograph_spark.extraction.mentions import low_confidence_log
-    from kartograph_spark.oracle.oracle import oracle_low_log
+def test_low_log_in_pipeline_output(spark, pipeline_out, corpus_dir):
+    """run_pipeline's stored LOW-tier log equals the DuckDB oracle's
+    independent per-pattern scans."""
+    import __spark_entry__ as entry
+    from oracle_check import assert_matches_oracle, duckdb_frame
 
-    got = low_confidence_log(transcripts_df).toPandas()
-    exp = oracle_low_log(transcripts_pdf)
-    key = ["conv_id", "turn_idx", "kind", "match_idx", "surface"]
-    assert set(map(tuple, got[key].itertuples(index=False))) == set(
-        map(tuple, exp[key].itertuples(index=False))
-    )
-    assert len(got) > 0  # the corpus plants LOW phrases
+    out, metrics = pipeline_out
+    got = spark.read.parquet(f"{out}/low_confidence_log").toPandas()
+    want = duckdb_frame(entry._low_log_oracle_sql(f"{corpus_dir}/transcripts.parquet"))
+    assert_matches_oracle(got, want)
+    assert len(got) == metrics["low_confidence_logged"] > 0  # the corpus plants LOW phrases
 
 
 def test_struct_path_patterns_checked_first():

@@ -3,12 +3,8 @@ hand-built corpus whose tool values and struct names carry tab, newline
 and double-space variants — the URN slug must collapse every whitespace
 run the same way in both implementations."""
 
-import hashlib
-import math
-
 import pandas as pd
-
-COLS = ["subj", "pred", "obj", "obj_is_ref", "dtype", "conv_id", "turn_idx"]
+from oracle_check import TRIPLE_COLS, assert_matches_oracle, duckdb_frame
 
 TOOLS = [
     "kubectl\tapply",
@@ -19,19 +15,6 @@ TOOLS = [
     None,
 ]
 STRUCT_NAMES = ["payments\tapi", "payments\napi", "payments  api", "billing\t\t_svc"]
-
-
-def _row_md5(pdf: pd.DataFrame) -> str:
-    def cell(v):
-        if v is None or (isinstance(v, float) and math.isnan(v)):
-            return "NULL"
-        return str(v)
-
-    rows = sorted(
-        "\x1f".join(cell(v) for v in r)
-        for r in pdf[COLS].itertuples(index=False, name=None)
-    )
-    return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
 def _corpus() -> pd.DataFrame:
@@ -56,7 +39,6 @@ def _corpus() -> pd.DataFrame:
 
 
 def test_build_triples_matches_duckdb_oracle_on_whitespace_names(spark, tmp_path):
-    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -77,15 +59,10 @@ def test_build_triples_matches_duckdb_oracle_on_whitespace_names(spark, tmp_path
     kept, _ = build_triples(spark, tr, al, PipelineConfig(n_buckets=4))
     got = kept.toPandas()
 
-    con = duckdb.connect()
-    try:
-        want = con.execute(entry._pipeline_oracle_sql(tr_path)).df()
-    finally:
-        con.close()
+    want = duckdb_frame(entry._pipeline_oracle_sql(tr_path))
 
     # the planted variants reach the output as slugged URNs
     tool_urns = set(got.loc[got["pred"] == "usedTool", "obj"])
     assert "urn:Tool:kubectl-apply" in tool_urns
     assert "urn:Tool:helm-upgrade" in tool_urns
-    assert len(got) == len(want)
-    assert _row_md5(got) == _row_md5(want)
+    assert_matches_oracle(got[TRIPLE_COLS], want)

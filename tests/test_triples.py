@@ -1,46 +1,39 @@
 """Triple-emission rules: predicate cleaning, literal sanitization,
 mixed-type resolution, N-Quads rendering (load_dgraph.py:273-417)."""
 
-import pandas as pd
 from pyspark.sql import functions as F
 
-from kartograph_spark import rules
 from kartograph_spark import triples as tr
-
-
-def test_clean_predicate_pandas():
-    s = pd.Series(["@type", "$schema", "a:b/c\\d", "uid", "dgraph.foo", "name"])
-    out = list(rules.clean_predicate(s))
-    assert out == ["type", "_schema", "a_b_c_d", "_uid", "_dgraph.foo", "name"]
 
 
 def test_clean_predicate_spark(spark):
     df = spark.createDataFrame(
-        [("@type",), ("$schema",), ("a:b/c\\d",), ("uid",), ("dgraph.foo",)],
+        [("@type",), ("$schema",), ("a:b/c\\d",), ("uid",), ("dgraph.foo",), ("name",)],
         "pred string",
     )
     got = [r[0] for r in df.select(tr.clean_predicate_col(F.col("pred"))).collect()]
-    assert got == ["type", "_schema", "a_b_c_d", "_uid", "_dgraph.foo"]
+    assert got == ["type", "_schema", "a_b_c_d", "_uid", "_dgraph.foo", "name"]
 
 
 def test_literal_sanitization_parity(spark):
     vals = ['has "quotes"', "line\nbreak", "back\\slash", "{json}", "[arr]", "None", "ok"]
-    s = pd.Series(vals)
-    esc = rules.escape_literal(s)
-    dropped = rules.literal_is_dropped(esc)
-    # {json}, [arr], None dropped (load_dgraph.py:408-417)
-    assert list(dropped) == [False, False, False, True, True, True, False]
-    assert esc[0] == 'has \\"quotes\\"'
-    assert esc[1] == "line\\nbreak"
-    assert esc[2] == "back\\\\slash"
-
     df = spark.createDataFrame([(v,) for v in vals], "val string")
     got = df.select(
         tr.escape_literal_col(F.col("val")).alias("esc"),
         (~tr.literal_kept_col(tr.escape_literal_col(F.col("val")))).alias("dropped"),
     ).collect()
-    assert [r["esc"] for r in got] == list(esc)
-    assert [r["dropped"] for r in got] == list(dropped)
+    esc = [r["esc"] for r in got]
+    # {json}, [arr], None dropped (load_dgraph.py:408-417)
+    assert [r["dropped"] for r in got] == [False, False, False, True, True, True, False]
+    assert esc == [
+        'has \\"quotes\\"',
+        "line\\nbreak",
+        "back\\\\slash",
+        "{json}",
+        "[arr]",
+        "None",
+        "ok",
+    ]
 
 
 def test_encode_urn_parity(spark):
@@ -53,13 +46,10 @@ def test_encode_urn_parity(spark):
         "urn:Team:data eng",
         'urn:X:we"ird',
     ]
-    s = rules.encode_urn(pd.Series(vals))
-    # parity with urllib.parse.quote(urn, safe=":") on this charset
-    for raw, enc in zip(vals, s):
-        assert enc == urllib.parse.quote(raw, safe=":")
     df = spark.createDataFrame([(v,) for v in vals], "urn string")
     got = [r[0] for r in df.select(tr.encode_urn_col(F.col("urn"))).collect()]
-    assert got == list(s)
+    # parity with urllib.parse.quote(urn, safe=":") (load_dgraph.py:351-355)
+    assert got == [urllib.parse.quote(v, safe=":") for v in vals]
 
 
 def test_mixed_type_resolution(spark):
